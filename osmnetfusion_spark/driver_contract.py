@@ -353,9 +353,7 @@ def q_knn_snap(spark, sf_dir):
     """
     p = doc_points(spark, sf_dir).select("doc_id", "lat", "lon")
     s = supplier_segments(spark, sf_dir)
-    out = spatial.knn_join_segments(
-        p, s, radius_m=SNAP_RADIUS_M, k=1, point_id="doc_id", seg_id="edge_id"
-    )
+    out = spatial.cell_join(p, s, (SNAP_RADIUS_M,), "doc_id", "edge_id")
     return out.select(
         "doc_id", "edge_id", F.round("dist_m", 4).alias("dist_m")
     ).orderBy("doc_id")
@@ -2297,19 +2295,15 @@ def q_amenity_radius(spark, sf_dir):
     many doc 'amenities' lie within 200 m (`amenity_nearby`) and how many
     snap to it as their single nearest edge (`amenity_on`).
 
-    Dedicated radius path (no per-point ranking window over all in-radius
-    candidates); the nearest flag comes from the k=1 cellfold. FLAT_KX
-    makes the distance bit-identical to the DuckDB oracle."""
+    Radius membership (no per-point ranking window over all in-radius
+    candidates) and the nearest fold of the same cell join. FLAT_KX makes
+    the distance bit-identical to the DuckDB oracle."""
     p = doc_points(spark, sf_dir).select("doc_id", "lat", "lon")
     s = supplier_segments(spark, sf_dir)
-    pairs = spatial.radius_join_segments(
-        p, s, radius_m=200.0, point_id="doc_id", seg_id="edge_id",
-        flat_kx=FLAT_KX,
+    pairs = spatial.cell_join(
+        p, s, (200.0,), "doc_id", "edge_id", nearest=False, flat_kx=FLAT_KX
     )
-    nearest = spatial.knn_join_segments(
-        p, s, radius_m=200.0, k=1, point_id="doc_id", seg_id="edge_id",
-        flat_kx=FLAT_KX,
-    )
+    nearest = spatial.cell_join(p, s, (200.0,), "doc_id", "edge_id", flat_kx=FLAT_KX)
     nearby = pairs.groupBy("edge_id").agg(F.count(F.lit(1)).alias("n_nearby"))
     on = nearest.groupBy("edge_id").agg(F.count(F.lit(1)).alias("n_on"))
     return (
@@ -2769,13 +2763,12 @@ def q_signal_snap(spark, sf_dir):
     nodes = supplier_segments(spark, sf_dir).select(
         F.col("edge_id").alias("node_id"), F.col("ay").alias("lat"), F.col("ax").alias("lon")
     )
-    # escalating-radius cascade: identical to a single 250 m pass (any
-    # match within a smaller radius IS the 250 m nearest), but the fine
-    # first rings keep the cell join from degenerating into a cross
-    # product on this dense region (4.1e8 -> ~4e6 candidate pairs)
-    snapped = spatial.knn_join_points_adaptive(
-        sig, nodes, radii=(60.0, 250.0),
-        probe_id="sig_id", build_id="node_id",
+    # radius ladder: identical to a single 250 m pass (any match within a
+    # smaller radius IS the 250 m nearest), but the fine first rung keeps
+    # the cell join from degenerating into a cross product on this dense
+    # region (4.1e8 -> ~4e6 candidate pairs)
+    snapped = spatial.cell_join(
+        sig, nodes, (60.0, 250.0), "sig_id", "node_id", broadcast_build=False
     )
     return (
         snapped.groupBy("node_id")

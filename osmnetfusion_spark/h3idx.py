@@ -173,15 +173,3 @@ def cover_segment_np(
     lat = ay + (by - ay) * t
     return np.unique(cell_np(lat, lon, res))
 
-
-def cover_bbox_np(
-    min_lat: float, min_lon: float, max_lat: float, max_lon: float, res: int
-) -> np.ndarray:
-    """All cells overlapping a bounding box (polygon build-side cover)."""
-    inv = float(1 << res)
-    i0 = int(math.floor((min_lon + 180.0) * inv))
-    i1 = int(math.floor((max_lon + 180.0) * inv))
-    j0 = int(math.floor((min_lat + 90.0) * inv))
-    j1 = int(math.floor((max_lat + 90.0) * inv))
-    ii, jj = np.meshgrid(np.arange(i0, i1 + 1), np.arange(j0, j1 + 1))
-    return (res * SHIFT_RES + jj.ravel() * SHIFT_J + ii.ravel()).astype(np.int64)

@@ -2,129 +2,53 @@
 
 The reference's spatial predicates are shapely STRtree probes and
 ``sjoin_nearest`` calls with metre caps (``p2_enrichData.py:140, 453, 541,
-590``; ``p3_functions.py:406``). None of that distributes. Here every
-spatial join is the same two-phase plan:
+590``; ``p3_functions.py:406``). None of that distributes. Every distance
+join here -- signals to nodes (20 m), amenities to edges (200 m), PT stops
+to edges (30 m), pages to edges (J15) -- is one operator, :func:`cell_join`,
+a partition-based spatial merge join (PBSM) over grid cells
+(:mod:`..h3idx`):
 
-1. **candidate generation** -- both sides keyed by grid cells
-   (:mod:`..h3idx`); the *small* (build) side is exploded to its cover cells
-   dilated by ring-1, the *large* (probe) side contributes only its own
-   cell; a plain equi-join on ``cell`` produces candidate pairs. The
-   explosion is pure column arithmetic (sequence/transform/flatten), so the
-   whole candidate stage is JVM-side whole-stage codegen and Catalyst/AQE
-   handle the join strategy (broadcast for small builds, skew-split for hot
-   cells).
-2. **exact refinement** -- closed-form point-to-segment distance as column
-   math (kNN), or a vectorized numpy kernel in a pandas UDF (ray-casting
-   PIP, segment-clip intersection length) where no closed form exists.
+1. **cover** -- the build side is exploded to the cells its geometry
+   crosses, dilated by ring-1; the probe side contributes only its own
+   cell. A point build is a zero-length segment, so one cover expression
+   serves both build kinds. The explosion is pure column arithmetic
+   (sequence/transform/flatten), so the candidate stage is JVM-side
+   whole-stage codegen and Catalyst/AQE pick the join strategy (broadcast
+   for small builds, skew-split for hot cells).
+2. **equi-join** on ``cell`` -- the candidate pairs.
+3. **distance filter** -- closed-form point-to-segment metres with the
+   per-segment projection constants computed once on the build side, or
+   haversine metres for a point build.
+4. **fold** -- per probe its nearest build entity, or per (probe, build
+   entity) the minimum distance over the entity's segments.
 
 Ring-1 dilation is complete because :func:`..h3idx.pick_res` chooses the
 finest resolution whose cell short side still exceeds the join radius.
+
+The polygon joins (:func:`pip_join`, :func:`intersection_length_join`)
+share steps 1-2 with a bbox cover, and refine with a vectorized numpy
+kernel in a pandas UDF (ray-casting PIP, segment-clip intersection length)
+where no closed form exists.
 """
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import h3idx
 from ..functions import geo
-
-_NEIGHBOR_OFFS = [dj * h3idx.SHIFT_J + di for dj in (-1, 0, 1) for di in (-1, 0, 1)]
-
-
-def fan_out_probe(df: DataFrame, key: str) -> DataFrame:
-    """Ensure the probe side has >= the session's shuffle parallelism.
-
-    Small probe tables arrive as 1-2 scan partitions (a tiny parquet file
-    cannot split below its row groups), and because the build side
-    broadcasts, the candidate-explosion + refinement map stage inherits
-    that parallelism: ONE task evaluating millions of candidate pairs
-    (measured: 1.03M-pair amenity join ran 9.6 s single-task at sf0.1).
-    A pre-shuffle of the narrow probe rows fans the stage out -- and since
-    it hash-partitions on the entity key, the downstream per-entity
-    aggregation/window needs no second exchange. No-op at web scale, where
-    the probe already has thousands of partitions.
-
-    WARNING: never probe `df.rdd.getNumPartitions()` here -- under AQE,
-    converting to an RDD FINALIZES the adaptive plan, which materializes
-    its shuffle query stages: a silent extra job that re-executes the
-    whole probe subplan (measured: one hidden job per join, and the
-    two-parallelism scaling evidence collapsed from 0.80 to 0.28 until it
-    was removed). The small-scan test below reads only file metadata.
-    """
-    spark = df.sparkSession
-    target = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    # non-file sources (range/createDataFrame/post-shuffle) inherit the
-    # session's parallelism already; only a small file scan needs fan-out
-    if not files or len(files) >= target:
-        return df
-    import os as _os
-
-    total = 0
-    for f in files[:64]:
-        try:
-            total += _os.path.getsize(f[7:] if f.startswith("file:") else f)
-        except OSError:
-            return df
-    if total > (128 << 20):
-        return df  # big scan: the file splitter already parallelizes it
-    return df.repartition(target, F.col(key))
-
+from .partitioning import fan_out, scan_bytes
 
 # conservative ceiling for an explicit build-side broadcast: cover-cell
 # explosion multiplies the segment rows ~3-5x, and every executor holds a
 # full copy, so cap well below typical executor memory
 BROADCAST_GUARD_BYTES = 256 << 20
-
-
-def _input_bytes(df: DataFrame) -> int | float | None:
-    """Source-file bytes feeding a DataFrame (None if not a file scan;
-    ``float('inf')`` if a source file cannot be sized locally — which
-    includes every non-local URI such as s3a:// or hdfs://).
-
-    File-metadata only -- never touches ``df.rdd`` (under AQE that
-    finalizes the plan and runs hidden jobs, see :func:`fan_out_probe`).
-    Pre-filter source size, so it over-estimates: safe direction for a
-    broadcast guard.
-    """
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    import os as _os
-    from urllib.parse import urlparse as _urlparse
-
-    total = 0
-    for f in files:
-        parsed = _urlparse(f)
-        # Only LOCAL files are sizable here. A remote URI (s3a/hdfs/...)
-        # must read as unsizable by its scheme, not by hoping getsize
-        # fails: its bare path could coincidentally exist on the driver
-        # (shared mount, leftover warehouse) and a bogus local size
-        # would re-enable the broadcast hint for a planet-scale table.
-        if parsed.scheme not in ("", "file"):
-            return float("inf")
-        # file:///p and file:/p both occur in Hadoop path renderings;
-        # urlparse handles either (netloc empty, path '/p').
-        path = parsed.path if parsed.scheme == "file" else f
-        try:
-            total += _os.path.getsize(path)
-        except OSError:
-            # Unreadable size must read as "too big", not "no estimate":
-            # returning None here would silently re-enable the broadcast
-            # hint for a build side we could not size (unsafe direction).
-            return float("inf")
-    return total
 
 
 def _maybe_broadcast(df: DataFrame, want: bool) -> DataFrame:
@@ -140,7 +64,7 @@ def _maybe_broadcast(df: DataFrame, want: bool) -> DataFrame:
     """
     if not want:
         return df
-    est = _input_bytes(df)
+    est = scan_bytes(df)
     if est is not None and est > BROADCAST_GUARD_BYTES:
         return df
     return F.broadcast(df)
@@ -224,344 +148,165 @@ def cover_bbox_cells(
     )
 
 
-# ------------------------------------------------------------------ kNN join
+# ---------------------------------------------------------------- cell join
 
 
-def knn1_join_segments_cellfold(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
+def cell_join(
+    probe: DataFrame,
+    build: DataFrame,
+    radii: tuple[float, ...],
+    probe_id: str,
+    build_id: str,
+    nearest: bool = True,
     broadcast_build: bool = True,
-    carry: tuple[str, ...] = (),
     flat_kx: float | None = None,
 ) -> DataFrame:
-    """kNN(1) with a single map-side-combinable aggregation.
+    """Distance join of probe points to build segments or points.
 
-    Plan: build side exploded to ring-1-dilated cover cells (small; stays
-    under the broadcast threshold, so the candidate join is SHUFFLE-FREE
-    and the per-candidate distance runs inside whole-stage codegen), then
-    ONE ``groupBy(point).agg(min(struct(dist, seg_id)))`` -- lexicographic
-    struct-min IS the kNN(1) rule, and partial aggregation collapses each
-    map partition to ~one row per point before the only shuffle. Replaces
-    the groupBy-per-entity + window plan (two wide shuffles) with identical
-    results.
+    ``probe`` carries a unique ``probe_id`` and ``lat, lon``. ``build``
+    carries ``build_id`` and either ``ax, ay, bx, by`` (segments from
+    :func:`explode_segments`; projected point-to-segment metres, the same
+    value as :func:`..functions.geo.point_segment_dist_m`) or ``lat, lon``
+    (points; :func:`..functions.geo.haversine_m`).
+
+    - ``nearest=True``: one row per matched probe, ``(probe_id, build_id,
+      dist_m, ...)`` -- its nearest build entity within the radius, ties
+      broken by ``(dist_m, build_id)``. Every other probe column rides the
+      fold as its value, never as a tie-breaker, so the caller needs no
+      re-join on ``probe_id``; select only the columns you need first.
+      Replaces the reference's ``sjoin_nearest(max_distance=...)``.
+    - ``nearest=False``: one row per (probe, build entity) within the
+      radius, ``(probe_id, build_id, dist_m)`` with the minimum over the
+      entity's segments -- membership without a per-probe ranking.
+
+    Both folds are map-side combinable, so each map partition collapses to
+    ~one row per key before the only shuffle. The probe side is never
+    exploded: shuffle volume is O(|probe| + |build| * cover cells).
+
+    ``radii`` is the radius ladder; a 1-tuple is a single pass. With more
+    rungs each one joins only the probes still unmatched, at the next
+    radius. That equals one pass at the last radius -- a match within r_i
+    is the nearest within any r_j > r_i -- but the fine first rungs keep the
+    per-cell candidate product small where one coarse pass degenerates
+    into a cross product (measured: 4.1e8 candidate pairs in 9 cells for
+    the 50k x 10k signal snap). Exact only for the nearest fold.
+
+    ``broadcast_build``: hint when the build side is known small (the
+    simplified network vs a page corpus); pass False when it scales with
+    the network, and AQE picks the side from runtime sizes. ``flat_kx``:
+    fixed projection constant (:func:`..functions.geo.flat_kx_for_lat`)
+    for bit-stable cross-engine segment distances.
     """
+    if len(radii) == 1:
+        return _cell_pass(probe, build, radii[0], probe_id, build_id, nearest, broadcast_build, flat_kx)
+    if not nearest:
+        raise ValueError("a radius ladder is exact only for the nearest fold")
+    outs = []
+    for r in radii:
+        matched = _cell_pass(
+            probe, build, r, probe_id, build_id, nearest, broadcast_build, flat_kx
+        ).localCheckpoint()
+        outs.append(matched)
+        probe = probe.join(matched.select(probe_id), probe_id, "left_anti")
+    return reduce(DataFrame.unionByName, outs)
+
+
+def _cell_pass(
+    probe: DataFrame,
+    build: DataFrame,
+    radius_m: float,
+    probe_id: str,
+    build_id: str,
+    nearest: bool,
+    broadcast_build: bool,
+    flat_kx: float | None,
+) -> DataFrame:
+    """One cover -> equi-join -> distance filter -> fold pass of :func:`cell_join`."""
     res = h3idx.pick_res(radius_m)
-    m = F.lit(geo.M_PER_DEG)
-    build = (
-        segments.select(F.col(seg_id).alias("__e"), "ax", "ay", "bx", "by")
-        .withColumn(
-            "cell",
-            F.explode(
-                cover_segment_cells(
-                    F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1
-                )
-            ),
-        )
+    lat, lon = F.col("lat"), F.col("lon")
+    if {"ax", "ay", "bx", "by"} <= set(build.columns):
+        b = build.select(F.col(build_id).alias("__b"), "ax", "ay", "bx", "by")
+        ax, ay, bx, by = F.col("ax"), F.col("ay"), F.col("bx"), F.col("by")
         # projection constants are pure functions of the segment: compute
-        # them ONCE on the (tiny) build side so the per-pair expression --
+        # them ONCE on the (small) build side so the per-pair expression --
         # which Catalyst duplicates into the join condition -- stays small.
         # Same arithmetic as geo.point_segment_dist_m, bit-identical.
-        .withColumn(
-            "__kx",
-            F.lit(float(flat_kx))
-            if flat_kx is not None
-            else F.cos(F.radians((F.col("ay") + F.col("by")) * 0.5)) * m,
+        m = F.lit(geo.M_PER_DEG)
+        kx, abx, aby, v = F.col("__kx"), F.col("__abx"), F.col("__aby"), F.col("__v")
+        consts = [
+            ("__kx", F.lit(float(flat_kx)) if flat_kx is not None
+             else F.cos(F.radians((ay + by) * 0.5)) * m),
+            ("__abx", (bx - ax) * kx),
+            ("__aby", (by - ay) * m),
+            ("__v", abx * abx + aby * aby),
+        ]
+        apx, apy = (lon - ax) * kx, (lat - ay) * m
+        u = apx * abx + apy * aby
+        w = apx * apx + apy * apy
+        d2 = F.when(u <= 0, w).when(u >= v, w - 2 * u + v).otherwise(w - (u * u) / v)
+        d = F.sqrt(F.greatest(d2, F.lit(0.0)))
+    else:
+        # a point is a zero-length segment: same cover, haversine distance
+        b = build.select(
+            F.col(build_id).alias("__b"), lat.alias("__blat"), lon.alias("__blon")
         )
-        .withColumn("__abx", (F.col("bx") - F.col("ax")) * F.col("__kx"))
-        .withColumn("__aby", (F.col("by") - F.col("ay")) * m)
-        .withColumn("__v", F.col("__abx") * F.col("__abx") + F.col("__aby") * F.col("__aby"))
-    )
-    probe = fan_out_probe(
-        points.select(point_id, lat, lon, *[c for c in carry if c not in (point_id, lat, lon)]),
-        point_id,
-    ).withColumn("cell", h3idx.cell_col(F.col(lat), F.col(lon), res))
-    apx = (F.col(lon) - F.col("ax")) * F.col("__kx")
-    apy = (F.col(lat) - F.col("ay")) * m
-    u = apx * F.col("__abx") + apy * F.col("__aby")
-    w = apx * apx + apy * apy
-    d2 = (
-        F.when(u <= 0, w)
-        .when(u >= F.col("__v"), w - 2 * u + F.col("__v"))
-        .otherwise(w - (u * u) / F.col("__v"))
-    )
-    d = F.sqrt(F.greatest(d2, F.lit(0.0)))
-    build_side = _maybe_broadcast(build, broadcast_build)
+        ax = bx = F.col("__blon")
+        ay = by = F.col("__blat")
+        consts = []
+        d = geo.haversine_m(lat, lon, ay, ax)
+    b = b.withColumn("cell", F.explode(cover_segment_cells(ax, ay, bx, by, res, dilate_k=1)))
+    for name, expr in consts:
+        b = b.withColumn(name, expr)
     cand = (
-        probe.join(build_side, "cell")
+        fan_out(probe, probe_id)
+        .withColumn("cell", h3idx.cell_col(lat, lon, res))
+        .join(_maybe_broadcast(b, broadcast_build), "cell")
         .withColumn("__d", d)
         .filter(F.col("__d") <= F.lit(float(radius_m)))
     )
-    carry_out = [c for c in carry if c != point_id]
-    best = cand.groupBy(point_id).agg(
-        F.min(
-            F.struct(
-                F.col("__d").alias("d"),
-                F.col("__e").alias("be"),
-                # carry columns are functions of the point -- identical on
-                # every candidate row, so they ride the fold for free and
-                # the caller skips a full re-join on point_id downstream
-                *[F.col(c).alias(f"c_{c}") for c in carry_out],
-            )
+    if not nearest:
+        return cand.groupBy(probe_id, F.col("__b").alias(build_id)).agg(
+            F.min("__d").alias("dist_m")
+        )
+    rest = [c for c in probe.columns if c != probe_id]
+    best = cand.groupBy(probe_id).agg(
+        F.min_by(
+            F.struct(F.col("__d"), F.col("__b"), *rest), F.struct(F.col("__d"), F.col("__b"))
         ).alias("__best")
     )
     return best.select(
-        F.col(point_id),
-        F.col("__best.be").alias(seg_id),
-        F.col("__best.d").alias("dist_m"),
-        F.lit(1).alias("knn_rank"),
-        *[F.col(f"__best.c_{c}").alias(c) for c in carry_out],
+        probe_id,
+        F.col("__best.__b").alias(build_id),
+        F.col("__best.__d").alias("dist_m"),
+        *[F.col("__best")[c].alias(c) for c in rest],
     )
 
 
-def knn_join_segments(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    k: int = 1,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    broadcast_build: bool = True,
-    carry: tuple[str, ...] = (),
-    flat_kx: float | None = None,
-) -> DataFrame:
-    """kNN (<= radius_m) join of points to polyline *segments*.
+def _bbox_cover(polys: DataFrame, poly_id: str, geom: str, res: int) -> DataFrame:
+    """Polygon build side: ``(poly_id, __poly, cell)`` per cell its bbox overlaps."""
 
-    ``segments`` must carry ``ax, ay, bx, by`` (from
-    :func:`explode_segments`). Returns one row per (point, matched entity)
-    with ``dist_m`` and ``knn_rank`` (1 = nearest). Deterministic ties:
-    ``(dist_m, seg_id)``.
+    def extent(pick, init: float, axis: int) -> Column:
+        return F.aggregate(F.col(geom), F.lit(init), lambda acc, c: pick(acc, c[axis]))
 
-    Replaces the reference's ``sjoin_nearest(max_distance=...)`` snaps
-    (signals->nodes 20 m ``p2_enrichData.py:453``, amenities->edges 200 m
-    ``:541``, PT stops->edges 30 m ``:590``) and the graft's pages->edges
-    snap. Plan shape: build-side cover explode (dilated ring-1) -> equi-join
-    on cell -> closed-form distance -> per-entity min -> per-point top-k
-    window. The probe side is never exploded, so the shuffle volume is
-    O(|points| + |segments| * cover_cells).
-
-    k=1 dispatches to :func:`knn1_join_segments_cellfold` (identical
-    results, no candidate shuffle at all).
-
-    ``broadcast_build``: hint when the SEGMENTS side is known small (the
-    simplified network vs a page corpus). Pass False when the segments
-    side scales with the network (enrichment joins: layer points probe a
-    planet-sized network) -- the plain equi-join lets AQE pick the
-    broadcast side from runtime sizes.
-    """
-    if k == 1:
-        return knn1_join_segments_cellfold(
-            points, segments, radius_m,
-            point_id=point_id, seg_id=seg_id, lat=lat, lon=lon,
-            broadcast_build=broadcast_build, carry=carry, flat_kx=flat_kx,
+    return (
+        polys.select(
+            F.col(poly_id),
+            F.col(geom).alias("__poly"),
+            extent(F.least, 1e9, 1).alias("__mnlat"),
+            extent(F.greatest, -1e9, 1).alias("__mxlat"),
+            extent(F.least, 1e9, 0).alias("__mnlon"),
+            extent(F.greatest, -1e9, 0).alias("__mxlon"),
         )
-    assert not carry, "carry is only supported on the k=1 cellfold path"
-    per_entity = radius_join_segments(
-        points, segments, radius_m,
-        point_id=point_id, seg_id=seg_id, lat=lat, lon=lon,
-        broadcast_build=broadcast_build, flat_kx=flat_kx,
-    )
-    w = Window.partitionBy(point_id).orderBy(F.col("dist_m").asc(), F.col(seg_id).asc())
-    ranked = per_entity.withColumn("knn_rank", F.row_number().over(w))
-    return ranked.filter(F.col("knn_rank") <= k)
-
-
-def radius_join_segments(
-    points: DataFrame,
-    segments: DataFrame,
-    radius_m: float,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    broadcast_build: bool = True,
-    flat_kx: float | None = None,
-) -> DataFrame:
-    """In-radius membership join: one row per (point, entity) pair within
-    ``radius_m``, with ``dist_m`` = min distance over the entity's segments.
-
-    This is the radius half of the reference's amenity join
-    (``p2_enrichData.py:536-552`` -- every edge within 200 m gets
-    ``amenity_nearby``). Unlike :func:`knn_join_segments` with a huge ``k``,
-    there is NO per-point ranking window: dense cells don't pay a
-    ``row_number`` over every in-radius candidate. Callers that also need a
-    nearest-entity flag should take it from the k=1 cellfold and join the
-    two aggregates (both shuffles are on the same keys and combiner-friendly).
-    """
-    res = h3idx.pick_res(radius_m)
-    build = segments.withColumn(
-        "cell",
-        F.explode(
-            cover_segment_cells(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res, dilate_k=1)
-        ),
-    )
-    probe = fan_out_probe(points, point_id).withColumn(
-        "cell", h3idx.cell_col(F.col(lat), F.col(lon), res)
-    )
-
-    cand = probe.join(_maybe_broadcast(build, broadcast_build), "cell").withColumn(
-        "seg_dist_m",
-        geo.point_segment_dist_m(
-            F.col(lat), F.col(lon), F.col("ay"), F.col("ax"), F.col("by"), F.col("bx"),
-            flat_kx=flat_kx,
-        ),
-    )
-    cand = cand.filter(F.col("seg_dist_m") <= F.lit(float(radius_m)))
-    # per (point, entity): min over that entity's segments (and dup cells)
-    return cand.groupBy(point_id, seg_id).agg(F.min("seg_dist_m").alias("dist_m"))
-
-
-def knn_join_segments_adaptive(
-    points: DataFrame,
-    segments: DataFrame,
-    radii: tuple[float, ...] = (25.0, 200.0),
-    k: int = 1,
-    point_id: str = "point_id",
-    seg_id: str = "edge_id",
-    lat: str = "lat",
-    lon: str = "lon",
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Multi-resolution kNN snap: escalate unmatched points to wider radii.
-
-    A single-pass kNN at a large radius forces coarse cells, and in dense
-    areas the per-cell candidate product explodes (the urban-core skew the
-    north star calls out). Instead: snap at the finest radius (fine cells,
-    tiny candidate sets); only points with no match escalate to the next
-    radius -- typically a few percent. The result is identical to a
-    single-pass kNN at the largest radius because any match within radius
-    r_i is by definition the global nearest within r_j > r_i as well.
-    Correctness caveat: identical only for k=1 (enforced).
-    """
-    assert k == 1, "adaptive cascade preserves exactness only for k=1"
-    remaining = points
-    outs = []
-    for r in radii:
-        matched = knn_join_segments(
-            remaining, segments, radius_m=r, k=1,
-            point_id=point_id, seg_id=seg_id, lat=lat, lon=lon, carry=carry,
-        ).localCheckpoint()
-        outs.append(matched)
-        remaining = remaining.join(matched.select(point_id), point_id, "left_anti")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def knn_join_points_adaptive(
-    probe: DataFrame,
-    build: DataFrame,
-    radii: tuple[float, ...] = (30.0, 250.0),
-    probe_id: str = "probe_id",
-    build_id: str = "build_id",
-    probe_lat: str = "lat",
-    probe_lon: str = "lon",
-    build_lat: str = "lat",
-    build_lon: str = "lon",
-) -> DataFrame:
-    """Escalating-radius kNN(1) point snap (the point twin of
-    :func:`knn_join_segments_adaptive`).
-
-    A single pass at a large radius forces coarse cells; when the whole
-    region spans only a handful of them the cell join degenerates to a
-    cross product (measured: the 50k x 10k signal snap produced 4.1e8
-    candidate pairs in 9 cells). Snapping at the finest radius first
-    keeps the per-cell candidate product tiny, and only unmatched points
-    escalate. Identical to the single-pass result: a match within radius
-    r_i is by definition the global nearest within any r_j > r_i, and
-    the (dist, id) tie-break is the same at every level.
-    """
-    remaining = probe
-    outs = []
-    for r in radii:
-        matched = knn_join_points(
-            remaining, build, radius_m=r, k=1,
-            probe_id=probe_id, build_id=build_id,
-            probe_lat=probe_lat, probe_lon=probe_lon,
-            build_lat=build_lat, build_lon=build_lon,
-        ).localCheckpoint()
-        outs.append(matched)
-        remaining = remaining.join(matched.select(probe_id), probe_id, "left_anti")
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
-    return out
-
-
-def knn_join_points(
-    probe: DataFrame,
-    build: DataFrame,
-    radius_m: float,
-    k: int = 1,
-    probe_id: str = "probe_id",
-    build_id: str = "build_id",
-    probe_lat: str = "lat",
-    probe_lon: str = "lon",
-    build_lat: str = "lat",
-    build_lon: str = "lon",
-    exclude_same_id: bool = False,
-) -> DataFrame:
-    """kNN (<= radius_m) point-to-point join (signals -> nearest node)."""
-    res = h3idx.pick_res(radius_m)
-    b = build.select(
-        F.col(build_id).alias("__bid"),
-        F.col(build_lat).alias("__blat"),
-        F.col(build_lon).alias("__blon"),
-    ).withColumn(
-        "cell",
-        F.explode(
-            dilate_cells(F.array(h3idx.cell_col(F.col("__blat"), F.col("__blon"), res)), 1)
-        ),
-    )
-    p = fan_out_probe(probe, probe_id).withColumn(
-        "cell", h3idx.cell_col(F.col(probe_lat), F.col(probe_lon), res)
-    )
-    cand = p.join(b, "cell").withColumn(
-        "dist_m",
-        geo.haversine_m(F.col(probe_lat), F.col(probe_lon), F.col("__blat"), F.col("__blon")),
-    )
-    cand = cand.filter(F.col("dist_m") <= F.lit(float(radius_m)))
-    if exclude_same_id:
-        cand = cand.filter(F.col(probe_id) != F.col("__bid"))
-    probe_cols = [c for c in probe.columns]
-    if k == 1:
-        # kNN(1) = lexicographic struct-min on (dist, build_id) -- a
-        # map-side-combinable aggregate that collapses every cell's
-        # candidate product to one row per probe BEFORE the shuffle,
-        # replacing the row_number window (shuffle + per-probe sort over
-        # all in-radius candidates; measured 17 s -> ~2 s on the 50k x 10k
-        # signal snap). Tie-break identical to the window's
-        # (dist asc, build_id asc); probe columns are constant per group
-        # and ride the fold. Guide §2.3 "aggregate before you shuffle".
-        extra = [c for c in probe_cols if c != probe_id]
-        best = cand.groupBy(probe_id).agg(
-            F.min(
-                F.struct(
-                    F.col("dist_m").alias("d"),
-                    F.col("__bid").alias("b"),
-                    *[F.col(c).alias(f"c_{c}") for c in extra],
+        .withColumn(
+            "cell",
+            F.explode(
+                cover_bbox_cells(
+                    F.col("__mnlat"), F.col("__mnlon"), F.col("__mxlat"), F.col("__mxlon"), res
                 )
-            ).alias("__best")
+            ),
         )
-        return best.select(
-            *[
-                F.col(f"__best.c_{c}").alias(c) if c != probe_id else F.col(probe_id)
-                for c in probe_cols
-            ],
-            F.col("__best.b").alias(build_id),
-            F.col("__best.d").alias("dist_m"),
-            F.lit(1).alias("knn_rank"),
-        )
-    w = Window.partitionBy(probe_id).orderBy(F.col("dist_m").asc(), F.col("__bid").asc())
-    out = cand.withColumn("knn_rank", F.row_number().over(w)).filter(F.col("knn_rank") <= k)
-    return out.withColumnRenamed("__bid", build_id).drop("__blat", "__blon", "cell")
+        .drop("__mnlat", "__mxlat", "__mnlon", "__mxlon")
+    )
 
 
 # -------------------------------------------------------- point-in-polygon
@@ -600,26 +345,8 @@ def pip_join(
     """
     if res is None:
         res = 12  # ~27 m cells; polygons are O(100 m)
-    b = (
-        polys.select(
-            F.col(poly_id),
-            F.col(geom).alias("__poly"),
-            F.aggregate(F.col(geom), F.lit(1e9), lambda acc, c: F.least(acc, c[1])).alias("__mnlat"),
-            F.aggregate(F.col(geom), F.lit(-1e9), lambda acc, c: F.greatest(acc, c[1])).alias("__mxlat"),
-            F.aggregate(F.col(geom), F.lit(1e9), lambda acc, c: F.least(acc, c[0])).alias("__mnlon"),
-            F.aggregate(F.col(geom), F.lit(-1e9), lambda acc, c: F.greatest(acc, c[0])).alias("__mxlon"),
-        )
-        .withColumn(
-            "cell",
-            F.explode(
-                cover_bbox_cells(
-                    F.col("__mnlat"), F.col("__mnlon"), F.col("__mxlat"), F.col("__mxlon"), res
-                )
-            ),
-        )
-        .drop("__mnlat", "__mxlat", "__mnlon", "__mxlon")
-    )
-    p = fan_out_probe(points, point_id).withColumn(
+    b = _bbox_cover(polys, poly_id, geom, res)
+    p = fan_out(points, point_id).withColumn(
         "cell", h3idx.cell_col(F.col(lat), F.col(lon), res)
     )
     cand = p.join(b, "cell").select(
@@ -721,26 +448,8 @@ def intersection_length_join(
     Output: ``(seg_id, poly_id, isect_len_m)`` summed over the entity's
     segments.
     """
-    b = (
-        polys.select(
-            F.col(poly_id),
-            F.col(geom).alias("__poly"),
-            F.aggregate(F.col(geom), F.lit(1e9), lambda acc, c: F.least(acc, c[1])).alias("__mnlat"),
-            F.aggregate(F.col(geom), F.lit(-1e9), lambda acc, c: F.greatest(acc, c[1])).alias("__mxlat"),
-            F.aggregate(F.col(geom), F.lit(1e9), lambda acc, c: F.least(acc, c[0])).alias("__mnlon"),
-            F.aggregate(F.col(geom), F.lit(-1e9), lambda acc, c: F.greatest(acc, c[0])).alias("__mxlon"),
-        )
-        .withColumn(
-            "cell",
-            F.explode(
-                cover_bbox_cells(
-                    F.col("__mnlat"), F.col("__mnlon"), F.col("__mxlat"), F.col("__mxlon"), res
-                )
-            ),
-        )
-        .drop("__mnlat", "__mxlat", "__mnlon", "__mxlon")
-    )
-    s = fan_out_probe(segments, seg_id).withColumn(
+    b = _bbox_cover(polys, poly_id, geom, res)
+    s = fan_out(segments, seg_id).withColumn(
         "cell",
         F.explode(cover_segment_cells(F.col("ax"), F.col("ay"), F.col("bx"), F.col("by"), res)),
     )

@@ -93,9 +93,9 @@ def landuse_ratio(
     # Membership-only: radius join has no per-point ranking window, so
     # dense cells don't pay a row_number over every in-radius candidate
     # (same redesign as add_bicycle_parking, round 2).
-    near = spatial.radius_join_segments(
-        pts, segs, radius_m=point_buffer_m,
-        point_id="layer_id", seg_id="edge_id", broadcast_build=False,
+    near = spatial.cell_join(
+        pts, segs, (point_buffer_m,), "layer_id", "edge_id",
+        nearest=False, broadcast_build=False,
     )
     pt_counts = near.groupBy("edge_id").agg(F.count(F.lit(1)).alias(f"{kind}_points"))
 
@@ -176,9 +176,9 @@ def landuse_ratio_all(
     # Membership-only: radius join has no per-point ranking window, so
     # dense cells don't pay a row_number over every in-radius candidate
     # (same redesign as add_bicycle_parking, round 2).
-    near = spatial.radius_join_segments(
-        pts, segs, radius_m=point_buffer_m,
-        point_id="layer_id", seg_id="edge_id", broadcast_build=False,
+    near = spatial.cell_join(
+        pts, segs, (point_buffer_m,), "layer_id", "edge_id",
+        nearest=False, broadcast_build=False,
     )
     pt_counts = (
         near.withColumn("__ki", kind_i)
@@ -448,13 +448,10 @@ def add_traffic_lights(nodes: DataFrame, signals: DataFrame) -> DataFrame:
     dependent; we pin a total order for determinism).
     """
     sig = signals.withColumn("sig_osmid", F.split(F.col("id"), "/").getItem(1).cast("long"))
-    snapped = spatial.knn_join_points(
+    snapped = spatial.cell_join(
         sig.select("sig_osmid", "lat", "lon"),
         nodes.select(F.col("osmid").alias("node_osmid"), F.col("y").alias("lat"), F.col("x").alias("lon")),
-        radius_m=20.0,
-        k=1,
-        probe_id="sig_osmid",
-        build_id="node_osmid",
+        (20.0,), "sig_osmid", "node_osmid", broadcast_build=False,
     ).filter(F.col("sig_osmid") != F.col("node_osmid"))
     per_node = snapped.groupBy("node_osmid").agg(
         F.concat_ws(",", F.array_sort(F.collect_list(F.col("sig_osmid").cast("string")))).alias(
@@ -494,16 +491,13 @@ def add_bicycle_parking(edges: DataFrame, amenities: DataFrame) -> DataFrame:
     )
     pts = amenities.select("amenity_id", "lat", "lon")
     names = amenities.select("amenity_id", "amenity")
-    # dedicated radius membership (no per-amenity ranking window over every
-    # in-radius candidate -- dense cells would pay it for nothing) + the
-    # nearest flag from the shuffle-light k=1 cellfold
-    near = spatial.radius_join_segments(
-        pts, segs, radius_m=200.0,
-        point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
+    # radius membership (no per-amenity ranking over every in-radius
+    # candidate -- dense cells would pay it for nothing) + the nearest flag
+    near = spatial.cell_join(
+        pts, segs, (200.0,), "amenity_id", "edge_id", nearest=False, broadcast_build=False,
     ).join(names, "amenity_id")
-    nearest = spatial.knn_join_segments(
-        pts, segs, radius_m=200.0, k=1,
-        point_id="amenity_id", seg_id="edge_id", broadcast_build=False,
+    nearest = spatial.cell_join(
+        pts, segs, (200.0,), "amenity_id", "edge_id", broadcast_build=False,
     ).join(names, "amenity_id")
 
     nearby = near.groupBy("edge_id").agg(
@@ -558,8 +552,8 @@ def add_pt_stops(edges: DataFrame, stops: DataFrame) -> DataFrame:
     stops_k = stops.select(
         F.concat_ws("/", "member_ref", "name").alias("stop_id"), "member_ref", "name", "lat", "lon"
     ).dropDuplicates(["stop_id"])
-    snapped = spatial.knn_join_segments(
-        stops_k, segs, radius_m=30.0, k=1, point_id="stop_id", seg_id="edge_id",
+    snapped = spatial.cell_join(
+        stops_k.select("stop_id", "lat", "lon"), segs, (30.0,), "stop_id", "edge_id",
         broadcast_build=False,
     ).join(stops_k.select("stop_id", "name"), "stop_id")
     per_edge = snapped.groupBy("edge_id").agg(

@@ -147,19 +147,18 @@ def snap_pages_to_edges(
     ``edge_segments`` comes from :func:`..operators.spatial.explode_segments`
     over the simplified edges. Returns ``(url, edge_id, dist_m, lat, lon)``;
     ties broken by ``(dist_m, edge_id)`` for run-to-run determinism. The
-    page coordinates ride the kNN fold (``carry``) so downstream tiling
-    never re-joins the page corpus on url -- at 10^12 pages that re-join
-    was a second full-table shuffle for two doubles.
+    page coordinates ride the nearest fold so downstream tiling never
+    re-joins the page corpus on url -- at 10^12 pages that re-join was a
+    second full-table shuffle for two doubles.
 
-    Uses the multi-resolution cascade (fine cells first, escalate the
-    unmatched tail) -- exact for k=1, and immune to the dense-cell
-    candidate blow-up at the wide radius.
+    Uses a radius ladder (fine cells first, escalate the unmatched tail)
+    -- exact for the nearest fold, and immune to the dense-cell candidate
+    blow-up at the wide radius.
     """
     ladder = [25.0, 60.0, radius_m]
     radii = tuple(r for r in ladder if r < radius_m) + (radius_m,)
-    return spatial.knn_join_segments_adaptive(
-        pages, edge_segments, radii=radii, k=1,
-        point_id="url", seg_id="edge_id", carry=("lat", "lon"),
+    return spatial.cell_join(
+        pages.select("url", "lat", "lon"), edge_segments, radii, "url", "edge_id"
     ).select("url", "edge_id", "dist_m", "lat", "lon")
 
 

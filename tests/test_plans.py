@@ -135,15 +135,11 @@ def test_broadcast_guard_blocks_large_build(spark, tmp_path, monkeypatch):
 
     pts = DC.doc_points(spark, SF).select("doc_id", "lat", "lon")
     # small file, default guard: hint honored
-    df = SP.knn_join_segments(
-        pts, file_segs, radius_m=100.0, k=1, point_id="doc_id", seg_id="edge_id"
-    )
+    df = SP.cell_join(pts, file_segs, (100.0,), "doc_id", "edge_id")
     assert "BroadcastHashJoin" in plan_of(df)
     # same file "too large": hint dropped, no explicit broadcast of the build
     monkeypatch.setattr(SP, "BROADCAST_GUARD_BYTES", 1)
-    df2 = SP.knn_join_segments(
-        pts, file_segs, radius_m=100.0, k=1, point_id="doc_id", seg_id="edge_id"
-    )
+    df2 = SP.cell_join(pts, file_segs, (100.0,), "doc_id", "edge_id")
     assert "ResolvedHint" not in df2._jdf.queryExecution().analyzed().toString()
 
 

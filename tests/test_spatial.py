@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 from osmnetfusion_spark import h3idx, synth
 from osmnetfusion_spark.functions import geo
 from osmnetfusion_spark.operators import spatial
+from osmnetfusion_spark.operators.partitioning import fan_out, scan_bytes
 from osmnetfusion_spark.plans import pages as P
 from osmnetfusion_spark.plans import tiles as T
 
@@ -202,30 +203,75 @@ def test_salted_list_agg_matches_plain(spark):
 
 
 def test_input_bytes_handles_uri_forms_and_fails_safe(spark, tmp_path):
-    """Broadcast size guard (_input_bytes): both file URI renderings
-    resolve; an unreadable file reads as 'too big' (inf), never as
-    'no estimate' -- None would silently re-enable the broadcast hint
-    for an unsizeable build side (ADVICE r2)."""
-    from osmnetfusion_spark.operators import spatial
+    """Scan-size probe (scan_bytes): both file URI renderings resolve;
+    every file of a many-file scan is summed; an unreadable file reads as
+    'too big' (inf), never as 'no estimate' -- None would silently
+    re-enable the broadcast hint for an unsizeable build side (ADVICE r2)."""
+    import os
 
     p = str(tmp_path / "sz.parquet")
     spark.range(0, 1000).write.parquet(p)
     df = spark.read.parquet(p)
-    est = spatial._input_bytes(df)
+    est = scan_bytes(df)
     assert est is not None and 0 < est < 1 << 20
-
-    import os
 
     real = [f for f in os.listdir(p) if f.endswith(".parquet")][0]
     size = os.path.getsize(os.path.join(p, real))
+
+    class Fake:
+        def __init__(self, files):
+            self.files = files
+
+        def inputFiles(self):
+            return self.files
+
     # both URI forms the JVM can emit must resolve to the same file
     for uri in (f"file://{p}/{real}", f"file:{p}/{real}"):
-        class Fake:
-            def inputFiles(self):
-                return [uri]
-        assert spatial._input_bytes(Fake()) == size
+        assert scan_bytes(Fake([uri])) == size
 
-    class Gone:
-        def inputFiles(self):
-            return ["file:///nonexistent/definitely/missing.parquet"]
-    assert spatial._input_bytes(Gone()) == float("inf")
+    # more than 64 files: every size counts, not just the first 64
+    many = []
+    for i in range(70):
+        f = tmp_path / f"part-{i:03d}"
+        f.write_bytes(b"x" * (i + 1))
+        many.append(f"file://{f}")
+    assert scan_bytes(Fake(many)) == sum(range(1, 71))
+
+    assert scan_bytes(Fake(["file:///nonexistent/definitely/missing.parquet"])) == float("inf")
+    assert scan_bytes(Fake(["s3a://bucket/key.parquet"])) == float("inf")
+    assert scan_bytes(Fake([])) is None
+
+
+def test_fan_out_small_scan_only(spark, tmp_path):
+    """fan_out repartitions a thin file scan to the shuffle parallelism --
+    on the keys when given, round-robin otherwise -- and leaves non-file
+    sources untouched."""
+    p = str(tmp_path / "thin.parquet")
+    spark.range(0, 100).coalesce(1).write.parquet(p)
+    df = spark.read.parquet(p)
+
+    def plan(d):
+        return d._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "RepartitionByExpression [id#" in plan(fan_out(df, "id"))
+    assert "Repartition 8, true" in plan(fan_out(df))
+    assert "Repartition" not in plan(fan_out(spark.range(0, 100), "id"))
+
+
+def test_nearest_fold_carries_non_orderable_columns(spark):
+    """Carried probe columns are the fold's value, not tie-breakers: a
+    map<string,string> column (not orderable) rides the nearest snap."""
+    probe = spark.createDataFrame(
+        [(1, 48.1001, 11.5001, {"k": "a"}), (2, 48.1050, 11.5050, {"k": "b"}),
+         (3, 48.2, 11.7, {"k": "c"})],
+        "pid long, lat double, lon double, tags map<string,string>",
+    )
+    segs = spark.createDataFrame(
+        [(10, 0, 11.5, 48.1, 11.501, 48.1), (20, 0, 11.505, 48.105, 11.506, 48.105)],
+        "edge_id long, seg_idx int, ax double, ay double, bx double, by double",
+    )
+    got = {
+        r.pid: (r.edge_id, dict(r.tags))
+        for r in spatial.cell_join(probe, segs, (50.0,), "pid", "edge_id").collect()
+    }
+    assert got == {1: (10, {"k": "a"}), 2: (20, {"k": "b"})}

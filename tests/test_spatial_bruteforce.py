@@ -48,10 +48,7 @@ def _brute_pairs(pts, segs, radius):
     return out
 
 
-@pytest.mark.parametrize("seed", [7, 19, 101])
-def test_radius_join_matches_bruteforce(spark, seed):
-    radius = 150.0
-    pts, segs = _random_layout(seed)
+def _frames(spark, pts, segs):
     pdf = spark.createDataFrame(
         [(i, float(la), float(lo)) for i, (la, lo) in enumerate(pts)],
         "point_id long, lat double, lon double",
@@ -60,10 +57,34 @@ def test_radius_join_matches_bruteforce(spark, seed):
         [(i, 0, float(a), float(b), float(c), float(d)) for i, (a, b, c, d) in enumerate(segs)],
         "edge_id long, seg_idx int, ax double, ay double, bx double, by double",
     )
+    return pdf, sdf
+
+
+def _nearest(probe, build, radii, probe_id, build_id):
+    return {
+        r[probe_id]: (r[build_id], r.dist_m)
+        for r in spatial.cell_join(probe, build, radii, probe_id, build_id).collect()
+    }
+
+
+def _check_ladder(got, want, probe, build, radii, probe_id, build_id):
+    """A ladder must reach past its first rung on this layout, and equal
+    the single pass at its last radius exactly."""
+    if len(radii) == 1:
+        return
+    assert any(d > radii[0] for _, d in want.values()), "no match beyond the first rung"
+    assert got == _nearest(probe, build, radii[-1:], probe_id, build_id)
+
+
+@pytest.mark.parametrize("seed", [7, 19, 101])
+def test_radius_join_matches_bruteforce(spark, seed):
+    radius = 150.0
+    pts, segs = _random_layout(seed)
+    pdf, sdf = _frames(spark, pts, segs)
     got = {
         (r.point_id, r.edge_id): r.dist_m
-        for r in spatial.radius_join_segments(
-            pdf, sdf, radius_m=radius, point_id="point_id", seg_id="edge_id"
+        for r in spatial.cell_join(
+            pdf, sdf, (radius,), "point_id", "edge_id", nearest=False
         ).collect()
     }
     want = _brute_pairs(pts, segs, radius)
@@ -75,26 +96,24 @@ def test_radius_join_matches_bruteforce(spark, seed):
         assert abs(got[k] - d) < 1e-6, (k, got[k], d)
 
 
-@pytest.mark.parametrize("seed", [7, 101])
-def test_knn1_matches_bruteforce(spark, seed):
-    radius = 200.0
+SEG_LADDER = (25.0, 60.0, 200.0)
+
+
+@pytest.mark.parametrize(
+    "seed,radii",
+    [
+        pytest.param(7, (200.0,), id="7"),
+        pytest.param(101, (200.0,), id="101"),
+        pytest.param(7, SEG_LADDER, id="7-ladder"),
+        pytest.param(101, SEG_LADDER, id="101-ladder"),
+    ],
+)
+def test_knn1_matches_bruteforce(spark, seed, radii):
     pts, segs = _random_layout(seed)
-    pdf = spark.createDataFrame(
-        [(i, float(la), float(lo)) for i, (la, lo) in enumerate(pts)],
-        "point_id long, lat double, lon double",
-    )
-    sdf = spark.createDataFrame(
-        [(i, 0, float(a), float(b), float(c), float(d)) for i, (a, b, c, d) in enumerate(segs)],
-        "edge_id long, seg_idx int, ax double, ay double, bx double, by double",
-    )
-    got = {
-        r.point_id: (r.edge_id, r.dist_m)
-        for r in spatial.knn_join_segments(
-            pdf, sdf, radius_m=radius, k=1, point_id="point_id", seg_id="edge_id"
-        ).collect()
-    }
+    pdf, sdf = _frames(spark, pts, segs)
+    got = _nearest(pdf, sdf, radii, "point_id", "edge_id")
     want = {}
-    for (pi, si), d in _brute_pairs(pts, segs, radius).items():
+    for (pi, si), d in _brute_pairs(pts, segs, radii[-1]).items():
         cur = want.get(pi)
         if cur is None or (d, si) < (cur[1], cur[0]):
             want[pi] = (si, d)
@@ -102,12 +121,35 @@ def test_knn1_matches_bruteforce(spark, seed):
     for pi, (si, d) in want.items():
         gsi, gd = got[pi]
         assert gsi == si and abs(gd - d) < 1e-6, (pi, got[pi], (si, d))
+    _check_ladder(got, want, pdf, sdf, radii, "point_id", "edge_id")
 
 
-@pytest.mark.parametrize("seed", [7])
-def test_knn_points_matches_bruteforce(spark, seed):
+@pytest.mark.parametrize("seed", [7, 101])
+def test_nearest_and_within_share_one_distance(spark, seed):
+    """Each point's nearest dist_m is exactly (==) the within-radius row
+    for the same (point, edge): both folds use one distance expression."""
+    radius = 200.0
+    pts, segs = _random_layout(seed)
+    pdf, sdf = _frames(spark, pts, segs)
+    near = _nearest(pdf, sdf, (radius,), "point_id", "edge_id")
+    within = {
+        (r.point_id, r.edge_id): r.dist_m
+        for r in spatial.cell_join(
+            pdf, sdf, (radius,), "point_id", "edge_id", nearest=False
+        ).collect()
+    }
+    assert near
+    for pi, (ei, d) in near.items():
+        assert within[(pi, ei)] == d, (pi, ei, within[(pi, ei)], d)
+        assert d == min(v for (p, _), v in within.items() if p == pi)
+
+
+@pytest.mark.parametrize(
+    "seed,radii",
+    [pytest.param(7, (250.0,), id="7"), pytest.param(7, (60.0, 250.0), id="7-ladder")],
+)
+def test_knn_points_matches_bruteforce(spark, seed, radii):
     """Point-to-point kNN(1) (signals->nodes path) vs haversine brute force."""
-    radius = 250.0
     pts, segs = _random_layout(seed)
     nodes = segs[:, :2]  # (x, y) pairs as build side
     probe = spark.createDataFrame(
@@ -118,20 +160,16 @@ def test_knn_points_matches_bruteforce(spark, seed):
         [(i, float(y), float(x)) for i, (x, y) in enumerate(nodes)],
         "node_id long, lat double, lon double",
     )
-    got = {
-        r.sig_id: (r.node_id, r.dist_m)
-        for r in spatial.knn_join_points(
-            probe, build, radius_m=radius, k=1, probe_id="sig_id", build_id="node_id"
-        ).collect()
-    }
+    got = _nearest(probe, build, radii, "sig_id", "node_id")
     want = {}
     for pi, (py_, px) in enumerate(pts):
         for ni, (nx, ny) in enumerate(nodes):
             d = float(geo.haversine_np(np.array([py_]), np.array([px]), np.array([ny]), np.array([nx]))[0])
-            if d <= radius:
+            if d <= radii[-1]:
                 cur = want.get(pi)
                 if cur is None or (d, ni) < (cur[1], cur[0]):
                     want[pi] = (ni, d)
     assert set(got) == set(want)
     for pi, (ni, d) in want.items():
         assert got[pi][0] == ni and abs(got[pi][1] - d) < 1e-6
+    _check_ladder(got, want, probe, build, radii, "sig_id", "node_id")

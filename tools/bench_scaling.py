@@ -72,9 +72,7 @@ def run_once(cpus: int, seg_path: str, n_pages: int, scale: int = 4) -> dict:
     )
     pg = PG.extract_text(pg)
     pg = pg.filter(F.length("extracted_text") > 0)
-    snap = spatial.knn1_join_segments_cellfold(
-        pg, segs, radius_m=60.0, point_id="url", seg_id="edge_id"
-    )
+    snap = spatial.cell_join(pg.select("url", "lat", "lon"), segs, (60.0,), "url", "edge_id")
     ted = tiles.tile_edge_density(snap, pg, segs)
     row = ted.agg(
         F.count(F.lit(1)).alias("n"),

@@ -2640,14 +2640,16 @@ Q_SPLIT_CURVES_SQL = f"""
 def q_cycleway_precedence(spark, sf_dir):
     """A8 cycleway-attributes precedence fold (p3_functions.py:1988-2021):
     left/right *lane* tags beat side tags beat plain cycleway/both, folded
-    per group through the engine's batched grouped-map (the same code path
-    step 11 uses). Derivation avoids the 'no'-removal micro-rule (covered
-    by the golden pipeline) so the oracle is the pure precedence cascade."""
+    per group by step 11's own ``folds.cycleway_attributes_cv`` over a
+    ``merge._GroupView``, through the engine's grouped-map runner.
+    Derivation avoids the 'no'-removal micro-rule (covered by the golden
+    pipeline) so the oracle is the pure precedence cascade."""
+    import numpy as np
     import pandas as pd
 
     from .functions import folds
     from .operators.groupedmap import grouped_map_batched
-    from .plans.merge import py_list_str
+    from .plans.merge import _GroupView, py_list_str
 
     p = _t(spark, sf_dir, "part")
     k = F.col("p_partkey")
@@ -2669,10 +2671,11 @@ def q_cycleway_precedence(spark, sf_dir):
     )
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        cv = _GroupView({c: pdf[c].to_numpy() for c in pdf.columns}, np.arange(len(pdf)))
         return pd.DataFrame(
             [{
                 "grp": int(pdf["grp"].iloc[0]),
-                "b_attribut": py_list_str(folds.cycleway_attributes_py(pdf)),
+                "b_attribut": py_list_str(folds.cycleway_attributes_cv(cv)),
             }]
         )
 

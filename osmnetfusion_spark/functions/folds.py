@@ -6,9 +6,10 @@ BicycleEdge/MotorizedEdge classes ``:1412-2152``) are order-sensitive
 greedy folds over *small groups* (nodes of one cluster; parallel edges of
 one node pair). The reference's own ``mp.Pool`` partitioning by uv-pair
 (``p3_functions.py:913-922``) proves the group is the correct shuffle key;
-in Spark each group is processed inside ``applyInPandas`` with the helpers
-below, which reimplement the reference's value semantics exactly (verified
-against the same truth tables as :mod:`.tags`).
+in Spark each group is processed inside a batched grouped map
+(:mod:`..operators.groupedmap`) with the helpers below, which reimplement
+the reference's value semantics exactly (verified against the same truth
+tables as :mod:`.tags`).
 """
 
 from __future__ import annotations
@@ -18,7 +19,6 @@ import math
 import re
 
 import numpy as np
-import pandas as pd
 
 _NONWORD_RE = re.compile(r"[^\w,]")
 
@@ -128,14 +128,9 @@ def _norm_old_osmid_one(x):
     return [x]
 
 
-def norm_old_osmid(series: pd.Series) -> pd.Series:
-    """Reference old_osmid prep (p3_functions.py:1584-1585): parse
-    "[...]"-strings, wrap scalars into lists, NaN -> []."""
-    return series.map(_norm_old_osmid_one)
-
-
 def norm_old_osmid_list(vals) -> list:
-    """List twin of :func:`norm_old_osmid` for the array-view fold."""
+    """Reference old_osmid prep (p3_functions.py:1584-1585) per value:
+    parse "[...]"-strings, wrap scalars into lists, NaN -> []."""
     return [_norm_old_osmid_one(x) for x in vals]
 
 
@@ -179,180 +174,24 @@ def _uniq(series) -> list:
     return seen
 
 
-def _bike_tag_any(df: pd.DataFrame) -> bool:
-    for c in BIKE_TAG_COLS:
-        if c not in df.columns:
-            continue
-        for x in _uniq(df[c]):
-            if (x is not None) and (x == x) and str(x) not in ["no", ""]:
-                return True
-    return False
-
-
-def access_walk_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('walk'), p3_functions.py:1639-1652."""
-    hw = _uniq(df.highway)
-    if any(x in WALK_HW_ALL for x in hw):
-        return True
-    if any(x in ["designated", "yes"] for x in _uniq(df.foot)):
-        return True
-    if any((x is not None) and (x == x) and x <= 50 for x in _uniq(df.maxspeed)):
-        return True
-    if any(
-        x not in ["no", ""] for x in _uniq(df.sidewalk) if (x is not None) and (x == x)
-    ):
-        return True
-    return False
-
-
-def access_bike_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('bike'), p3_functions.py:1654-1680."""
-    hw = _uniq(df.highway)
-    bic = _uniq(df.bicycle)
-    access = False
-    if any(x in BIKE_HW_ALL for x in hw) or any(x in ["yes", "designated"] for x in bic) or _bike_tag_any(df):
-        access = True
-    if all(x == "no" for x in bic):
-        access = False
-    if any(
-        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
-    ):
-        access = True
-    return access
-
-
-def access_motorized_py(df: pd.DataFrame) -> bool:
-    """checkModeAccess('motorized'), p3_functions.py:1682-1690."""
-    access = any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway))
-    if any(df.oneway.isin(["True", True])):
-        if "bike_access" in df.columns and any(df.bike_access == "bike_only"):
-            access = False
-    return access
-
-
-# ---------------------------------------------------- per-mode row subsets
-
-
-def walk_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """WalkEdge.getWalkEdges, p3_functions.py:1893-1915."""
-    hw = _uniq(df.highway)
-    if any(x in WALK_HW_STRICT for x in hw):
-        return df[df.highway.isin(WALK_HW_STRICT)]
-    if any(x == "designated" for x in _uniq(df.foot)):
-        return df[df.foot.isin(["designated", "yes"])]
-    if any(x in WALK_HW_ALL for x in hw):
-        return df[df.highway.isin(WALK_HW_ALL)]
-    return df[(df.maxspeed <= 30) | ~df.sidewalk.isin(["no", ""])]
-
-
-def bike_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """BicycleEdge.getBikeEdges, p3_functions.py:2044-2071."""
-    hw = _uniq(df.highway)
-    if any(x in BIKE_HW_STRICT for x in hw) or any(
-        x in ["yes", "designated"] for x in _uniq(df.bicycle)
-    ):
-        return df[
-            (df.highway.isin(BIKE_HW_STRICT)) | (df.bicycle == "yes") | (df.bicycle == "designated")
-        ]
-    cond0 = any(x in BIKE_HW_ALL for x in hw)
-    cond3 = any(
-        str(x) != "" for x in _uniq(df.cycleway) if (x is not None) and (x == x)
-    )
-    if cond0 or _bike_tag_any(df) or cond3:
-        return df[(df.highway.isin(BIKE_HW_ALL)) | (df.cycleway != "")]
-    # reference falls off the end -> None; callers guard with access first
-    return df.iloc[0:0]
-
-
-def motorized_rows(df: pd.DataFrame) -> pd.DataFrame:
-    """MotorizedEdge.getMotorizedEdges, p3_functions.py:2107-2120."""
-    if any(x not in NON_MOTORIZED_HW for x in _uniq(df.highway)):
-        return df[~df.highway.isin(NON_MOTORIZED_HW)]
-    return df
-
-
-# ----------------------------------------------------- bike attribute fold
-
 _BIKE_ATTR_RANK = ["no", "track", "lane", "advisory", "exclusive.", "exclusive"]
 
 
-def _get_bike_attr(df: pd.DataFrame, tag: str, prefix: str) -> list:
-    """BicycleEdge.getBikeAttr, p3_functions.py:1988-1998."""
-    if tag not in df.columns:
-        return []
-    attr = [
-        x
-        for x in df[tag]
-        if (x not in ["", "pictogram"]) and (x is not None) and (x == x)
-    ]
-    if ("no" in attr) and len(attr) > 1:
-        attr.remove("no")
-    for i, a in enumerate(attr):
-        if isinstance(a, list):
-            attr[i] = sorted(
-                a, key=lambda x: _BIKE_ATTR_RANK.index(x) if x in _BIKE_ATTR_RANK else 0
-            )[-1]
-    return [f"{prefix}{x}" for x in attr]
-
-
-def cycleway_attributes_py(df: pd.DataFrame) -> list:
-    """BicycleEdge attribute precedence fold, p3_functions.py:1999-2021:
-    left/right lane tags beat side tags beat plain cycleway/both."""
-    attr1 = _get_bike_attr(df, "cycleway:left:lane", "left_lane_")
-    attr2 = _get_bike_attr(df, "cycleway:right:lane", "right_lane_")
-    attr3, attr4, attr5 = [], [], []
-    if len(attr1) == 0:
-        attr3 = _get_bike_attr(df, "cycleway:left", "left_")
-    if len(attr2) == 0:
-        attr4 = _get_bike_attr(df, "cycleway:right", "right_")
-    if ((len(attr1) == 0) and (len(attr3) == 0)) or ((len(attr2) == 0) and (len(attr4) == 0)):
-        attr5 = _get_bike_attr(df, "cycleway", "")
-        attr5 += _get_bike_attr(df, "cycleway:both", "")
-        if ("no" in attr5) and len(attr5) > 1:
-            attr5.remove("no")
-    flat = []
-    for sub in (attr1, attr2, attr3, attr4, attr5):
-        for a in sub:
-            if isinstance(a, list):
-                flat.extend(a)
-            else:
-                flat.append(a)
-    return sorted(set(flat))
-
-
-def parking_py(df: pd.DataFrame) -> tuple[list, list]:
-    """AnEdge.hasParking, p3_functions.py:1606-1624."""
-    bad = ["no", "no_stopping", "fire_lane", ""]
-
-    def vals(col):
-        if col not in df.columns:
-            return []
-        return [
-            a
-            for a in _uniq(df[col])
-            if (a not in bad) and (a is not None) and (a == a)
-        ]
-
-    left = vals("parking:lane:left") + vals("parking:lane:both")
-    right = vals("parking:lane:right") + vals("parking:lane:both")
-    return sorted(set(left)), sorted(set(right))
-
-
-# --------------------------------------------- array-view (cv) fold twins
-# The pandas helpers above operate on per-group DataFrames; at 30k+ groups
-# the per-group Series/DataFrame boxing dominated the merge stage (~19 ms
-# per 2-row group, guide §4.2). The `_cv` twins below implement the SAME
-# value semantics over a lightweight column-dict view (`merge._GroupView`)
-# whose .col(name) returns a plain numpy slice. Every pandas construct is
+# ----------------------------------------- array-view (cv) mode/attr folds
+# The reference folds per-group DataFrames; at 30k+ groups the per-group
+# Series/DataFrame boxing dominated the merge stage (~19 ms per 2-row
+# group, guide §4.2). The `_cv` helpers below implement the SAME value
+# semantics over a lightweight column-dict view (`merge._GroupView`) whose
+# .col(name) returns a plain numpy slice. Every pandas construct is
 # mirrored explicitly:
 # - Series.isin(vals)        -> _isin (set membership; NaN never matches)
 # - object-Series ==/!= x    -> numpy elementwise compare (None != '' is
 #                               True in both, NaN != NaN is True in both)
 # - float-Series <= x        -> numpy compare (NaN -> False in both)
 # - Series.max() skipna      -> _nanmax
-# The pandas versions remain for merge_nodes and for tests that pin the
-# truth tables; test_merge_cv_equivalence pins cv == pandas on the same
-# groups.
+# Their pandas reference twins (`access_*_py`, `*_rows`,
+# `cycleway_attributes_py`, `parking_py`) live in tests/p3_twins.py;
+# tests/test_merge_cv_equivalence.py pins cv == pandas on the same groups.
 
 
 def _isin(arr, values) -> np.ndarray:
@@ -376,6 +215,7 @@ def _bike_tag_any_cv(cv) -> bool:
 
 
 def access_walk_cv(cv) -> bool:
+    """checkModeAccess('walk'), p3_functions.py:1639-1652."""
     hw = _uniq(cv.col("highway"))
     if any(x in WALK_HW_ALL for x in hw):
         return True
@@ -395,6 +235,7 @@ def access_walk_cv(cv) -> bool:
 
 
 def access_bike_cv(cv) -> bool:
+    """checkModeAccess('bike'), p3_functions.py:1654-1680."""
     hw = _uniq(cv.col("highway"))
     bic = _uniq(cv.col("bicycle"))
     access = False
@@ -414,6 +255,7 @@ def access_bike_cv(cv) -> bool:
 
 
 def access_motorized_cv(cv) -> bool:
+    """checkModeAccess('motorized'), p3_functions.py:1682-1690."""
     access = any(x not in NON_MOTORIZED_HW for x in _uniq(cv.col("highway")))
     ow = cv.col("oneway")
     if ((ow == True) | (ow == "True")).any():  # noqa: E712 - mirrors isin(["True", True])
@@ -423,6 +265,7 @@ def access_motorized_cv(cv) -> bool:
 
 
 def walk_mask_cv(cv) -> np.ndarray:
+    """WalkEdge.getWalkEdges row mask, p3_functions.py:1893-1915."""
     hw_arr = cv.col("highway")
     hw = _uniq(hw_arr)
     if any(x in WALK_HW_STRICT for x in hw):
@@ -438,6 +281,8 @@ def walk_mask_cv(cv) -> np.ndarray:
 
 
 def bike_mask_cv(cv) -> np.ndarray:
+    """BicycleEdge.getBikeEdges row mask, p3_functions.py:2044-2071 (the
+    reference falls off the end -> None; callers guard with access first)."""
     hw_arr = cv.col("highway")
     hw = _uniq(hw_arr)
     bic = cv.col("bicycle")
@@ -455,6 +300,7 @@ def bike_mask_cv(cv) -> np.ndarray:
 
 
 def motorized_mask_cv(cv) -> np.ndarray:
+    """MotorizedEdge.getMotorizedEdges row mask, p3_functions.py:2107-2120."""
     hw_arr = cv.col("highway")
     if any(x not in NON_MOTORIZED_HW for x in _uniq(hw_arr)):
         return ~_isin(hw_arr, NON_MOTORIZED_HW)
@@ -462,6 +308,7 @@ def motorized_mask_cv(cv) -> np.ndarray:
 
 
 def _get_bike_attr_cv(cv, tag: str, prefix: str) -> list:
+    """BicycleEdge.getBikeAttr, p3_functions.py:1988-1998."""
     if not cv.has(tag):
         return []
     attr = [
@@ -480,6 +327,8 @@ def _get_bike_attr_cv(cv, tag: str, prefix: str) -> list:
 
 
 def cycleway_attributes_cv(cv) -> list:
+    """BicycleEdge attribute precedence fold, p3_functions.py:1999-2021:
+    left/right lane tags beat side tags beat plain cycleway/both."""
     attr1 = _get_bike_attr_cv(cv, "cycleway:left:lane", "left_lane_")
     attr2 = _get_bike_attr_cv(cv, "cycleway:right:lane", "right_lane_")
     attr3, attr4, attr5 = [], [], []
@@ -505,6 +354,7 @@ def cycleway_attributes_cv(cv) -> list:
 
 
 def parking_cv(cv) -> tuple[list, list]:
+    """AnEdge.hasParking, p3_functions.py:1606-1624."""
     bad = ["no", "no_stopping", "fire_lane", ""]
 
     def vals(col):

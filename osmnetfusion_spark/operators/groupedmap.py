@@ -9,6 +9,10 @@ but ships whole partitions to Python: repartition by key, sort within
 partitions so groups are contiguous, then ``mapInPandas`` with a carry
 buffer for the group that straddles a batch boundary.
 
+This module is the only owner of that contiguous-group protocol. A fold
+that wants a whole run of groups at once (step 11 slices its groups out
+of one column-dict per batch) hands a body fold to :func:`_map_group_bodies`.
+
 Cost: one Python round trip per partition + a pandas groupby per batch.
 Scales the same way the reference's own mp.Pool partitioning did
 (p3_functions.py:913-922), but with Spark shuffle semantics.
@@ -16,8 +20,10 @@ Scales the same way the reference's own mp.Pool partitioning did
 
 from __future__ import annotations
 
+import warnings
 from typing import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
@@ -27,50 +33,68 @@ def grouped_map_batched(
     keys: list[str],
     fold: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Apply ``fold`` to each complete group of ``keys``, batched."""
-    spark = df.sparkSession
-    if num_partitions is None:
-        num_partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    rp = df.repartition(num_partitions, *keys).sortWithinPartitions(*keys)
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        carry: pd.DataFrame | None = None
-        for pdf in it:
-            if carry is not None and len(carry):
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
-            if not len(pdf):
-                continue
-            last_key = tuple(pdf.iloc[-1][k] for k in keys)
-            tail_mask = pd.Series(True, index=pdf.index)
-            for k, v in zip(keys, last_key):
-                tail_mask &= pdf[k].eq(v)
-            # rows of the final (possibly incomplete) group carry over
-            first_tail = tail_mask.idxmax() if tail_mask.any() else len(pdf)
-            carry = pdf.iloc[first_tail:]
-            body = pdf.iloc[:first_tail]
-            if len(body):
-                outs = [
-                    fold(g.reset_index(drop=True))
-                    for _, g in body.groupby(keys, sort=False)
-                ]
-                outs = [o for o in outs if o is not None and len(o)]
-                if len(outs) == 1:
-                    yield outs[0]
-                elif outs:
-                    import warnings
+    def fold_body(body: pd.DataFrame) -> list[pd.DataFrame]:
+        outs = [fold(g.reset_index(drop=True)) for _, g in body.groupby(keys, sort=False)]
+        return [o for o in outs if o is not None and len(o)]
 
-                    with warnings.catch_warnings():
-                        # pandas FutureWarning about all-NA column dtype
-                        # inference during concat; Arrow casts the result
-                        # to the declared schema anyway
-                        warnings.simplefilter("ignore", FutureWarning)
-                        yield pd.concat(outs, ignore_index=True)
+    return _map_group_bodies(df, keys, fold_body, schema)
+
+
+def _map_group_bodies(
+    df: DataFrame,
+    keys: list[str],
+    fold_body: Callable[[pd.DataFrame], list[pd.DataFrame]],
+    schema: str,
+) -> DataFrame:
+    """Repartition by ``keys``, sort within partitions, and run
+    :func:`_run_group_bodies` over each partition's Arrow batches."""
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+    rp = df.repartition(n, *keys).sortWithinPartitions(*keys)
+    return rp.mapInPandas(lambda it: _run_group_bodies(it, keys, fold_body), schema=schema)
+
+
+def _run_group_bodies(
+    it: Iterator[pd.DataFrame],
+    keys: list[str],
+    fold_body: Callable[[pd.DataFrame], list[pd.DataFrame]],
+) -> Iterator[pd.DataFrame]:
+    """The carry protocol over key-sorted batches. Each batch's rows
+    before its final (possibly incomplete) group form a body of whole
+    groups; that final group carries into the next batch, and the last
+    carry is folded on its own. ``fold_body`` returns the non-empty
+    frames of one body, which leave as ONE frame per body -- pandas
+    concat dtype inference depends on that chunking, and the Arrow
+    boundary sees the chunks as produced."""
+
+    def emit(body: pd.DataFrame) -> Iterator[pd.DataFrame]:
+        frames = fold_body(body)
+        if len(frames) == 1:
+            yield frames[0]
+        elif frames:
+            with warnings.catch_warnings():
+                # pandas FutureWarning about all-NA column dtype inference
+                # during concat; Arrow casts the result to the declared
+                # schema anyway
+                warnings.simplefilter("ignore", FutureWarning)
+                yield pd.concat(frames, ignore_index=True)
+
+    carry: pd.DataFrame | None = None
+    for pdf in it:
         if carry is not None and len(carry):
-            out = fold(carry.reset_index(drop=True))
-            if out is not None and len(out):
-                yield out
-
-    return rp.mapInPandas(run, schema=schema)
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+            carry = None
+        if not len(pdf):
+            continue
+        tail = np.ones(len(pdf), dtype=bool)
+        for k in keys:
+            tail &= pdf[k].eq(pdf[k].iat[-1]).to_numpy()
+        first_tail = int(tail.argmax()) if tail.any() else len(pdf)
+        carry = pdf.iloc[first_tail:]
+        body = pdf.iloc[:first_tail]
+        if len(body):
+            yield from emit(body)
+    if carry is not None and len(carry):
+        yield from emit(carry.reset_index(drop=True))

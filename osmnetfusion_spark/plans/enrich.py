@@ -311,9 +311,6 @@ def improve_bike_edges(edges: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------- P5
 
 
-_CYCLEWAY_BRANCHES = "advisory_lane exclusive_lane shared_lane bicycle_road one_track two_track track_or_lane fac_path pedestrian".split()
-
-
 def add_cycle_paths(edges: DataFrame) -> DataFrame:
     """cycleway_category classifier (p2:213-324): ordered boolean cascade,
     later branches overwrite earlier ones.

@@ -580,127 +580,16 @@ def cluster_nodes(
 # ------------------------------------------------------------------ step 6
 
 
-def _split_fast_2pt(pdf: pd.DataFrame) -> list[dict]:
-    """Vectorized refinement for single-segment edges (the common
-    case after split_curves): all candidate rows at once, ragged
-    member-disk lists flattened with a row-index gather. Element
-    arithmetic is IDENTICAL to the per-row loop below -- same
-    kernels, same comparison order -- so results are bit-equal
-    (pinned by the q_split_in_buffers contract, whose field is all
-    2-point edges, plus golden/parity over mixed geometries)."""
-    n = len(pdf)
-    g = pdf["geometry"].to_numpy()
-    ax = np.array([r[0][0] for r in g]); ay = np.array([r[0][1] for r in g])
-    bx = np.array([r[1][0] for r in g]); by = np.array([r[1][1] for r in g])
-    ring = (ax == bx) & (ay == by)
-    counts = np.array([len(d) for d in pdf["disks"]])
-    ridx = np.repeat(np.arange(n), counts)
-    dx = np.array([d["x"] for ds in pdf["disks"] for d in ds])
-    dy = np.array([d["y"] for ds in pdf["disks"] for d in ds])
-    dr = np.array([d["buf_r"] for ds in pdf["disks"] for d in ds])
-    # endpoint-inside-any-disk reject (reference :538)
-    in0 = geo.haversine_np(ay[ridx], ax[ridx], dy, dx) <= dr
-    in1 = geo.haversine_np(by[ridx], bx[ridx], dy, dx) <= dr
-    bad = np.zeros(n, dtype=bool)
-    np.logical_or.at(bad, ridx, in0 | in1)
-    # segment-intersects-any-disk requirement
-    dseg = geo.point_segment_dist_np(dy, dx, ay[ridx], ax[ridx], by[ridx], bx[ridx])
-    hit = np.zeros(n, dtype=bool)
-    np.logical_or.at(hit, ridx, dseg <= dr)
-    # nearest segment point to the cluster centroid
-    px = pdf["ccx"].to_numpy(dtype=float); py = pdf["ccy"].to_numpy(dtype=float)
-    kx = np.cos(np.radians(py)) * geo.M_PER_DEG
-    ky = geo.M_PER_DEG
-    apx, apy = (px - ax) * kx, (py - ay) * ky
-    abx, aby = (bx - ax) * kx, (by - ay) * ky
-    ab2 = abx * abx + aby * aby
-    t = np.where(ab2 > 0, (apx * abx + apy * aby) / np.where(ab2 > 0, ab2, 1), 0.0)
-    t = np.clip(t, 0.0, 1.0)
-    sx, sy = ax + t * (bx - ax), ay + t * (by - ay)
-    at_end = ((np.abs(sx - ax) < 1e-12) & (np.abs(sy - ay) < 1e-12)) | (
-        (np.abs(sx - bx) < 1e-12) & (np.abs(sy - by) < 1e-12)
-    )
-    ok = ~ring & ~bad & hit & ~at_end
-    seg_len = geo.haversine_np(ay, ax, by, bx)
-    pos = t * seg_len
-    eids = pdf["eid"].to_numpy()
-    mbs = pdf["merged_by"].to_numpy()
-    return [
-        {"eid": int(eids[i]), "seg_i": 0, "t": float(t[i]),
-         "sx": float(sx[i]), "sy": float(sy[i]), "pos": float(pos[i]),
-         "mb": int(mbs[i])}
-        for i in np.flatnonzero(ok)
-    ]
-
-
-def _split_rows_loop(pdf: pd.DataFrame) -> list[dict]:
-    """Per-row reference twin of :func:`_split_fast_multi` (the
-    pre-round-4 multi-point path, reference p3_functions.py:528-556).
-    Kept for the bit-equality parity test; not on the hot path."""
-    rows = []
-    for _, r in pdf.iterrows():
-        coords = np.array([list(c) for c in r["geometry"]], dtype=float)
-        if (coords[0] == coords[-1]).all():
-            continue  # linear ring (reference :534-536)
-        disks = np.array([[d["x"], d["y"], d["buf_r"]] for d in r["disks"]])
-        dd0 = geo.haversine_np(
-            np.full(len(disks), coords[0, 1]), np.full(len(disks), coords[0, 0]),
-            disks[:, 1], disks[:, 0],
-        )
-        dd1 = geo.haversine_np(
-            np.full(len(disks), coords[-1, 1]), np.full(len(disks), coords[-1, 0]),
-            disks[:, 1], disks[:, 0],
-        )
-        if (dd0 <= disks[:, 2]).any() or (dd1 <= disks[:, 2]).any():
-            continue  # an endpoint is inside the buffer (:538)
-        # does the edge intersect any member disk?
-        ax, ay = coords[:-1, 0], coords[:-1, 1]
-        bx, by = coords[1:, 0], coords[1:, 1]
-        hit = False
-        for dx, dy, dr in disks:
-            d = geo.point_segment_dist_np(
-                np.full(len(ax), dy), np.full(len(ax), dx), ay, ax, by, bx
-            )
-            if (d <= dr).any():
-                hit = True
-                break
-        if not hit:
-            continue
-        # nearest polyline point to the cluster centroid
-        px, py = float(r["ccx"]), float(r["ccy"])
-        kx = np.cos(np.radians(py)) * geo.M_PER_DEG
-        ky = geo.M_PER_DEG
-        apx, apy = (px - ax) * kx, (py - ay) * ky
-        abx, aby = (bx - ax) * kx, (by - ay) * ky
-        ab2 = abx * abx + aby * aby
-        t = np.where(ab2 > 0, (apx * abx + apy * aby) / np.where(ab2 > 0, ab2, 1), 0.0)
-        t = np.clip(t, 0.0, 1.0)
-        qx, qy = ax + t * (bx - ax), ay + t * (by - ay)
-        dist = np.sqrt((apx - t * abx) ** 2 + (apy - t * aby) ** 2)
-        si = int(np.argmin(dist))
-        sx, sy = float(qx[si]), float(qy[si])
-        if (abs(sx - coords[0, 0]) < 1e-12 and abs(sy - coords[0, 1]) < 1e-12) or (
-            abs(sx - coords[-1, 0]) < 1e-12 and abs(sy - coords[-1, 1]) < 1e-12
-        ):
-            continue  # nearest point is an endpoint (:540)
-        # position along the line for ordering multi-splits
-        seg_lens = geo.haversine_np(ay, ax, by, bx)
-        pos = float(np.sum(seg_lens[:si]) + t[si] * seg_lens[si])
-        rows.append({"eid": int(r["eid"]), "seg_i": si, "t": float(t[si]),
-                     "sx": sx, "sy": sy, "pos": pos, "mb": int(r["merged_by"])})
-    return rows
-
-
 def _split_fast_multi(pdf: pd.DataFrame) -> list[dict]:
-    """Vectorized refinement for multi-point polylines: the ragged
-    ``np.repeat`` row-index gather of :func:`_split_fast_2pt` extended to
-    two ragged axes (segments-per-edge and disks-per-cluster, crossed at
-    the pair level for the intersects-any-disk test). Element arithmetic,
-    comparison order, per-row first-argmin, and the prefix-sum shape of
-    ``pos`` are IDENTICAL to :func:`_split_rows_loop` -- the per-row
+    """Vectorized step-6 refinement for every polyline of >= 2 points:
+    ragged ``np.repeat`` row-index gathers over two ragged axes
+    (segments-per-edge and disks-per-cluster, crossed at the pair level
+    for the intersects-any-disk test). Element arithmetic, comparison
+    order, per-row first-argmin, and the prefix-sum shape of ``pos`` are
+    IDENTICAL to ``_split_rows_loop`` in tests/p3_twins.py -- the per-row
     reference twin -- so results are bit-equal (pinned by
-    ``tests/test_plans.py::test_split_fast_multi_matches_loop`` plus the
-    golden/parity suites over mixed geometries)."""
+    ``tests/test_plans.py::test_split_fast_multi_matches_loop`` over 2-point
+    and multi-point edges, plus the golden/parity suites)."""
     n = len(pdf)
     if n == 0:
         return []
@@ -758,7 +647,7 @@ def _split_fast_multi(pdf: pd.DataFrame) -> list[dict]:
     qx, qy = sax + t * (sbx - sax), say + t * (sby - say)
     dist = np.sqrt((apx - t * abx) ** 2 + (apy - t * aby) ** 2)
     # per-row FIRST index of the minimum (np.argmin semantics); every row
-    # here has >= 2 segments, so reduceat partitions the flat array exactly
+    # here has >= 1 segment, so reduceat partitions the flat array exactly
     rmin = np.minimum.reduceat(dist, soff[:-1])
     cand = np.where(dist == rmin[srid], spos, soff[-1])
     si = np.minimum.reduceat(cand, soff[:-1])
@@ -853,19 +742,12 @@ def split_edges_in_buffers(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 
     def find_splits(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows = []
-            n_pts = pdf["geometry"].map(len)
-            two_pt = n_pts == 2
-            if two_pt.any():
-                rows.extend(_split_fast_2pt(pdf[two_pt]))
             # degenerate (<2-point) geometries are skipped: a 1-point
             # "line" is a trivial ring (coords[0]==coords[-1], the
             # reference's :534 skip) and a 0-point one has nothing to
             # split -- routing them into the batch kernel would break
             # its ragged reduceat partitioning
-            multi = pdf[n_pts >= 3]
-            if len(multi):
-                rows.extend(_split_fast_multi(multi))
+            rows = _split_fast_multi(pdf[pdf["geometry"].map(len) >= 2])
             yield pd.DataFrame(
                 rows, columns=["eid", "seg_i", "t", "sx", "sy", "pos", "mb"]
             ) if rows else pd.DataFrame(
@@ -1049,11 +931,11 @@ def reassign_nodes(edges: DataFrame, nodes: DataFrame) -> DataFrame:
 def _reassign_batch(pdf: pd.DataFrame) -> tuple[list, list, list]:
     """Batch kernel for step 8 (all rows at once, ragged polylines
     flattened with the same ``np.repeat`` row-index gather as
-    ``_fast_2pt``). Element arithmetic, comparison order, and per-row
-    summation shape are IDENTICAL to :func:`_reassign_batch_loop` -- the
-    per-row reference twin -- so outputs are bit-equal (pinned by
-    ``tests/test_plans.py::test_reassign_batch_matches_loop`` and the
-    q_reassign contract)."""
+    :func:`_split_fast_multi`). Element arithmetic, comparison order, and
+    per-row summation shape are IDENTICAL to ``_reassign_batch_loop`` in
+    tests/p3_twins.py -- the per-row reference twin -- so outputs are
+    bit-equal (pinned by ``tests/test_plans.py::test_reassign_batch_matches_loop``
+    and the q_reassign contract)."""
     n = len(pdf)
     if n == 0:
         return [], [], []
@@ -1138,36 +1020,4 @@ def _reassign_batch(pdf: pd.DataFrame) -> tuple[list, list, list]:
         lin.append([[u_px[i], u_py[i]], [v_px[i], v_py[i]]])
         rea.append(chosen.tolist())
         lens.append(float(lens_all[i]))
-    return lin, rea, lens
-
-
-def _reassign_batch_loop(pdf: pd.DataFrame) -> tuple[list, list, list]:
-    """Per-row reference twin of :func:`_reassign_batch` (the pre-round-4
-    implementation, reference p3_functions.py:580-652). Kept for the
-    bit-equality parity test; not on the hot path."""
-    lin, rea, lens = [], [], []
-    for _, r in pdf.iterrows():
-        coords = [list(c) for c in r["geometry"]]
-        u_pt = [float(r["u_cx"]), float(r["u_cy"])]
-        v_pt = [float(r["v_cx"]), float(r["v_cy"])]
-        if r["u"] == r["new_u"]:
-            mid = coords[1:]
-        elif r["v"] == r["new_v"]:
-            mid = coords[:-1]
-        else:
-            mid = coords[:]
-        if mid:
-            mm = np.array(mid, dtype=float)
-            du = geo.haversine_np(mm[:, 1], mm[:, 0], np.full(len(mm), u_pt[1]), np.full(len(mm), u_pt[0]))
-            dv = geo.haversine_np(mm[:, 1], mm[:, 0], np.full(len(mm), v_pt[1]), np.full(len(mm), v_pt[0]))
-            i1, i2 = int(np.argmin(du)), int(np.argmin(dv))
-            mid = mid[i1 : i2 + 1]
-        fwd = [u_pt] + mid + [v_pt]
-        rev = [u_pt] + list(reversed(mid)) + [v_pt]
-        lf = geo.polyline_length_m(np.array(fwd))
-        lr = geo.polyline_length_m(np.array(rev))
-        chosen = fwd if lf < lr else rev
-        lin.append([u_pt, v_pt])
-        rea.append(chosen)
-        lens.append(geo.polyline_length_m(np.array([u_pt, v_pt])))
     return lin, rea, lens

@@ -27,8 +27,6 @@ byte-identical tables.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -40,7 +38,6 @@ LON0, LAT0 = 11.50, 48.10
 GRID_STEP = 0.0012  # ~89 m lon / ~133 m lat per grid step
 
 MOD = 2_147_483_647  # 2^31 - 1 (Lehmer modulus)
-MULT = 48_271
 
 
 def _lcg_col(seed_col, salt: int):
@@ -431,7 +428,3 @@ def text_sha256(df: DataFrame, url: str = "url", text: str = "text") -> DataFram
         F.col(url).alias("url"),
         F.sha2(F.encode(F.col(text), "UTF-8"), 256).alias("text_sha256"),
     )
-
-
-def sha256_bytes(b: bytes) -> str:
-    return hashlib.sha256(b).hexdigest()

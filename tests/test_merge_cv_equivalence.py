@@ -1,8 +1,9 @@
 """Pin the r6 array-view uv-merge fold to the original pandas fold.
 
-`merge._run_uv_batches` / `_fold_group_arrays` / `_an_edge_cv` replaced the
-per-group pandas fold (`_fold_uv_group_pandas` / `_an_edge_pandas`, kept as
-the reference twin) for speed; every output value must be identical. The
+`merge._fold_edge_body` / `_fold_group_arrays` / `_an_edge_cv`, run by the
+grouped-map runner, replaced the per-group pandas fold
+(`_fold_uv_group_pandas` / `_an_edge_pandas`, the reference twins in
+tests/p3_twins.py) for speed; every output value must be identical. The
 crafted groups below force the exotic branches the synthetic city rarely
 hits: cycleway lane attributes, parking lanes, width_cycle_path weighting,
 bike-only oneway motorized loss, all-None columns, NaN bearings, self-loop
@@ -17,7 +18,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from osmnetfusion_spark.operators import groupedmap
 from osmnetfusion_spark.plans import merge
+from p3_twins import _fold_uv_group_pandas
 
 COLS = [f.split(" ")[0].strip("`") for f in merge.EDGE_OUT_SCHEMA.split(", ")]
 
@@ -113,7 +116,7 @@ def _run_pandas_batches(it):
     """The ORIGINAL runner protocol (operators.groupedmap.grouped_map_batched
     with the pandas fold): per-batch body groups concatenated together, the
     straddling tail group folded separately from the carry. The chunking
-    must match `_run_uv_batches` exactly -- pandas concat dtype inference
+    must match `_run_edge_batches` exactly -- pandas concat dtype inference
     depends on which frames are concatenated together, and the Arrow
     boundary sees the chunks as produced."""
     carry = None
@@ -132,7 +135,7 @@ def _run_pandas_batches(it):
         body = pdf.iloc[:first_tail]
         if len(body):
             outs = [
-                merge._fold_uv_group_pandas(g.reset_index(drop=True))
+                _fold_uv_group_pandas(g.reset_index(drop=True))
                 for _, g in body.groupby(["__ku", "__kv"], sort=False)
             ]
             outs = [o for o in outs if o is not None and len(o)]
@@ -141,9 +144,15 @@ def _run_pandas_batches(it):
             elif outs:
                 yield pd.concat(outs, ignore_index=True)
     if carry is not None and len(carry):
-        out = merge._fold_uv_group_pandas(carry.reset_index(drop=True))
+        out = _fold_uv_group_pandas(carry.reset_index(drop=True))
         if out is not None and len(out):
             yield out
+
+
+def _run_edge_batches(it):
+    """The step-11 production path over in-memory batches: the runner's
+    carry protocol with merge's array-view body fold."""
+    return groupedmap._run_group_bodies(it, ["__ku", "__kv"], merge._fold_edge_body)
 
 
 def test_cv_fold_matches_pandas_fold():
@@ -151,7 +160,7 @@ def test_cv_fold_matches_pandas_fold():
     with warnings.catch_warnings():
         warnings.simplefilter("ignore", FutureWarning)
         old = pd.concat(list(_run_pandas_batches(iter([pdf]))), ignore_index=True)
-        new = pd.concat(list(merge._run_uv_batches(iter([pdf]))), ignore_index=True)
+        new = pd.concat(list(_run_edge_batches(iter([pdf]))), ignore_index=True)
     old, new = _norm(old), _norm(new)
     assert list(old.columns) == list(new.columns) == COLS
     assert len(old) == len(new)
@@ -164,11 +173,11 @@ def test_cv_fold_matches_pandas_fold():
 
 def test_cv_fold_carry_across_batches():
     pdf = _crafted()
-    whole = pd.concat(list(merge._run_uv_batches(iter([pdf]))), ignore_index=True)
+    whole = pd.concat(list(_run_edge_batches(iter([pdf]))), ignore_index=True)
     # split mid-group: the carry protocol must reassemble the straddler
     cut = 4
     split = pd.concat(
-        list(merge._run_uv_batches(iter([pdf.iloc[:cut], pdf.iloc[cut:]]))),
+        list(_run_edge_batches(iter([pdf.iloc[:cut], pdf.iloc[cut:]]))),
         ignore_index=True,
     )
     w, s = _norm(whole), _norm(split)

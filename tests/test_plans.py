@@ -233,10 +233,8 @@ def test_reassign_batch_matches_loop():
     import numpy as np
     import pandas as pd
 
-    from osmnetfusion_spark.plans.simplify import (
-        _reassign_batch,
-        _reassign_batch_loop,
-    )
+    from osmnetfusion_spark.plans.simplify import _reassign_batch
+    from p3_twins import _reassign_batch_loop
 
     rng = np.random.RandomState(42)
     rows = []
@@ -286,47 +284,101 @@ def test_reassign_batch_empty():
 
 
 def test_split_fast_multi_matches_loop():
-    """The vectorized multi-point split refinement must be bit-equal to
-    its per-row reference twin across rings, endpoint-inside rejects,
-    no-hit rejects, at-end rejects, and accepted multi-split geometries."""
+    """The vectorized split refinement must be bit-equal to its per-row
+    reference twin across rings, endpoint-inside rejects, no-hit rejects,
+    at-end rejects, and accepted splits -- for multi-point polylines and
+    for 2-point edges (the common case after split_curves)."""
     import numpy as np
     import pandas as pd
 
-    from osmnetfusion_spark.plans.simplify import (
-        _split_fast_multi,
-        _split_rows_loop,
-    )
+    from osmnetfusion_spark.plans.simplify import _split_fast_multi
+    from p3_twins import _split_rows_loop
 
-    rng = np.random.RandomState(7)
-    rows = []
-    for i in range(300):
-        npts = int(rng.randint(3, 9))
-        bx, by = 11.5 + rng.rand() * 0.1, 48.1 + rng.rand() * 0.1
-        geom = [[bx + j * 1e-3 + rng.randn() * 1e-4,
-                 by + rng.randn() * 1e-4] for j in range(npts)]
-        if i % 7 == 0:
-            geom[-1] = list(geom[0])  # linear ring
-        nd = int(rng.randint(1, 5))
-        disks = []
-        for _ in range(nd):
-            # mix of disks near the middle (hits), near endpoints
-            # (endpoint-inside rejects), and far away (no-hit rejects)
-            mode = rng.randint(3)
-            if mode == 0:
-                cx, cy = geom[npts // 2]
-            elif mode == 1:
-                cx, cy = geom[0]
-            else:
-                cx, cy = bx + 0.05, by + 0.05
-            disks.append({"x": cx + rng.randn() * 2e-4,
-                          "y": cy + rng.randn() * 2e-4,
-                          "buf_r": float(rng.uniform(5, 40))})
-        rows.append(dict(
-            eid=i, merged_by=10_000 + i, geometry=geom, disks=disks,
-            ccx=bx + rng.randn() * 1e-3, ccy=by + rng.randn() * 1e-3,
-        ))
-    pdf = pd.DataFrame(rows)
-    got = _split_fast_multi(pdf)
-    want = _split_rows_loop(pdf)
-    assert got == want          # same dicts, same order, bit-equal floats
-    assert 10 < len(got) < 300  # accepts AND rejects both exercised
+    for seed, npts_lo, npts_hi in ((7, 3, 9), (8, 2, 3)):
+        rng = np.random.RandomState(seed)
+        rows = []
+        for i in range(300):
+            npts = int(rng.randint(npts_lo, npts_hi))
+            bx, by = 11.5 + rng.rand() * 0.1, 48.1 + rng.rand() * 0.1
+            geom = [[bx + j * 1e-3 + rng.randn() * 1e-4,
+                     by + rng.randn() * 1e-4] for j in range(npts)]
+            if i % 7 == 0:
+                geom[-1] = list(geom[0])  # linear ring
+            nd = int(rng.randint(1, 5))
+            disks = []
+            for _ in range(nd):
+                # mix of disks near the middle (hits), near endpoints
+                # (endpoint-inside rejects), and far away (no-hit rejects)
+                mode = rng.randint(3)
+                if mode == 0 and npts == 2:
+                    cx, cy = np.mean(geom, axis=0)
+                elif mode == 0:
+                    cx, cy = geom[npts // 2]
+                elif mode == 1:
+                    cx, cy = geom[0]
+                else:
+                    cx, cy = bx + 0.05, by + 0.05
+                disks.append({"x": cx + rng.randn() * 2e-4,
+                              "y": cy + rng.randn() * 2e-4,
+                              "buf_r": float(rng.uniform(5, 40))})
+            rows.append(dict(
+                eid=i, merged_by=10_000 + i, geometry=geom, disks=disks,
+                ccx=bx + rng.randn() * 1e-3, ccy=by + rng.randn() * 1e-3,
+            ))
+        pdf = pd.DataFrame(rows)
+        got = _split_fast_multi(pdf)
+        want = _split_rows_loop(pdf)
+        assert got == want          # same dicts, same order, bit-equal floats
+        assert 10 < len(got) < 300  # accepts AND rejects both exercised
+
+
+def _cc_graph():
+    """Pairs ``(ia, ib, xa, ya, xb, yb)`` of a multi-component graph: a
+    48-node chain crossing ~12 CC blocks with ids DEScending along it (the
+    min label must travel the whole chain), a 10-node chain, a triangle
+    inside one block, and a lone pair; plus the expected min-id labels."""
+    pts, pairs = {}, []
+
+    def chain(ids, x0, y0):
+        for k, i in enumerate(ids):
+            pts[i] = (x0 + 0.004 * k, y0)
+        pairs.extend(zip(ids[:-1], ids[1:]))
+
+    chain(list(range(1048, 1000, -1)), 11.0, 48.0)
+    chain([77, 55, 99, 66, 88, 44, 111, 33, 122, 22], 11.0, 48.5)
+    chain([501, 503, 502], 12.0, 48.0)
+    pairs.append((502, 501))
+    chain([900, 901], 13.0, 47.0)
+    rows = [(a, b, *pts[a], *pts[b]) for a, b in pairs]
+    expected = {}
+    for comp in (range(1001, 1049), [77, 55, 99, 66, 88, 44, 111, 33, 122, 22],
+                 [501, 502, 503], [900, 901]):
+        for i in comp:
+            expected[i] = min(comp)
+    return rows, expected
+
+
+def test_cc_iterative_label_propagation_matches_union_find(spark):
+    """``driver_limit=0`` forces the distributed hash-min + pointer-jump
+    loop; its labels must equal the driver union-find path's."""
+    from osmnetfusion_spark.plans.simplify import _cc_iterative
+
+    rows, expected = _cc_graph()
+    ab = spark.createDataFrame([(a, b) for a, b, *_ in rows], "a long, b long")
+    distributed = {r.osmid: r.component for r in _cc_iterative(ab, spark, driver_limit=0).collect()}
+    driver = {r.osmid: r.component for r in _cc_iterative(ab, spark).collect()}
+    assert distributed == driver == expected
+
+
+def test_connected_components_root_map_join_matches_broadcast(spark):
+    """``driver_limit=0`` takes the non-broadcast root-map join for the
+    block-crossing pairs; the output must equal the default path's."""
+    from osmnetfusion_spark.plans.simplify import connected_components
+
+    rows, expected = _cc_graph()
+    pairs = spark.createDataFrame(
+        rows, "ia long, ib long, xa double, ya double, xb double, yb double"
+    )
+    joined = {r.osmid: r.component for r in connected_components(pairs, spark, driver_limit=0).collect()}
+    default = {r.osmid: r.component for r in connected_components(pairs, spark).collect()}
+    assert joined == default == expected

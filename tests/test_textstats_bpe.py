@@ -182,6 +182,18 @@ def test_bpe_encode_empty_merges_is_whitespace_split(spark):
     assert list(rows[0].toks) == ["a", "b", "c"] and rows[0].n_tokens == 3
 
 
+def test_bpe_encode_keeps_null_text_docs(spark):
+    """A null-text document is encoded as zero tokens, not dropped."""
+    df = spark.createDataFrame(
+        [(0, "a b a b"), (1, None), (2, "")], "doc_id long, text string"
+    )
+    rows = {r.doc_id: r for r in TS.bpe_encode(df, [("a", "b")]).collect()}
+    assert sorted(rows) == [0, 1, 2]
+    assert list(rows[1].toks) == [] and rows[1].n_tokens == 0
+    assert list(rows[2].toks) == [] and rows[2].n_tokens == 0
+    assert rows[0].n_tokens == 2
+
+
 def test_bpe_encode_validates_checkpoint_every(spark):
     import pandas as pd
 
